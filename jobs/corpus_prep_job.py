@@ -272,7 +272,8 @@ def main() -> None:
                     help="emit <output>/order/: deterministic weighted "
                          "source-interleave position per train doc (the "
                          "training-loader order; weights = --mixture when "
-                         "given, else round-robin per source)")
+                         "given, else each source's realized train-doc "
+                         "count)")
     args = ap.parse_args()
 
     spark = (

@@ -11,7 +11,9 @@ generates the seeded synthetic input instead.  With --output it commits each
 routed sink as a resumable snapshot group via TableIO (re-running the same
 --run-id skips already-committed groups — the checkpoint/resume story);
 without it, the routed frame is materialized through the noop sink
-(pure-compute benchmark mode).
+(pure-compute benchmark mode).  After a commit, ``per_sink`` holds the
+counts of the committed data, read back once from the written files, so
+the parse → enrich → route DAG runs once per run.
 """
 
 from __future__ import annotations

@@ -194,8 +194,9 @@ def label_propagation_fixed(
     engine, and an unrolled-CTE oracle can replay it.  Rounds are fixed
     (``iters``; sync LPA can oscillate on bipartite-ish graphs, so a
     convergence loop is deliberately NOT the contract — the round count
-    is).  Isolated nodes keep their own label.  Edges are treated as
-    undirected (symmetrized).
+    is).  Edges are treated as undirected (symmetrized).  The nodes are the
+    endpoints of non-self-loop edges: a node whose only edges are
+    self-loops is absent from the result.
 
     Scale shape: per round one equi-join of the #nodes-row label frame
     against the symmetrized edge frame (repartitioned by node once,

@@ -758,9 +758,8 @@ def source_token_kl(df, source_col: str = "source", text_col: str = "text"):
     (|V|·#sources rows) or smaller, so the tok-keyed join shuffles the
     vocabulary, never the corpus.  The per-source totals (#sources rows)
     and the grand total (1 row) ride the declared broadcast patterns.
-    Doubles stay exact: every ratio argument is a product of counts
-    < 2^53, so both engines compute bit-identical per-term values and the
-    6-decimal round absorbs summation-order noise.
+    The log's numerator and denominator are products of counts < 2^53,
+    so each is exact in a double.
 
     Returns (source, n_toks, n_distinct_toks, kl_nats)."""
     import pyspark.sql.functions as F
@@ -1063,8 +1062,7 @@ def bigram_entropy_by_source(df, source_col: str = "source", text_col: str = "te
     combinable (source, w1, w2) count; every later frame is vocab²-sized or
     smaller (marginals, per-source totals), re-joined on vocabulary keys
     under AQE skew-join like the LM-score operators.  Entropy terms are
-    ratios of exact integer counts; the 6-decimal round absorbs summation
-    order.
+    ratios of exact integer counts.
 
     Returns (source, n_tok, n_bigrams, n_distinct_bigrams, h_unigram,
     h_bigram_cond)."""

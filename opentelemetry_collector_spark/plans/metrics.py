@@ -20,6 +20,8 @@ from dataclasses import dataclass, field
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 METRICS_SCHEMA = (
     "run_id string, stage string, partition_id int, rows_in long, rows_out long, "
     "wall_ms double, snapshot_id string"
@@ -75,7 +77,7 @@ class StageMetrics:
         return result
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.rows, METRICS_SCHEMA)
+        return local_frame(spark, self.rows, METRICS_SCHEMA)
 
     def throughput(self, stage: str) -> float | None:
         """rows/sec for a stage-total row (the bench headline)."""

@@ -3,15 +3,20 @@
 Collector analog, end to end (SURVEY.md §3.2): OTLP receiver → attributes/
 span processors (regex extract) → resource processor (lookup enrich) →
 fanoutconnector → per-exporter sinks, with obsreport counters at ingress and
-egress.  Spark reading: one lazy DataFrame chain per stage; the only
-materializations are the sink writes and the aggregate collections.
+egress.  Spark reading: one lazy DataFrame chain per stage, run once per
+run.  Without ``io`` nothing is materialized here; the caller runs the
+routed frame and the two count frames.  With a partitioned ``io`` the
+chain runs once, in the sink write; the per-sink counts then come from one
+columnar count readback of the written data (a driver-local frame), so
+collecting ``sink_counts`` does not re-run parse → enrich → route.
 
 Scale posture (the 100 TB story):
 
 - parse/enrich are narrow (no shuffle): regexp_extract in codegen + a
   broadcast hash join.  The input scan is the only full pass.
-- route is a single CASE-WHEN tag (one pass) + per-sink filtered writes over
-  one persisted frame.
+- route is a single CASE-WHEN tag (one pass) + one ``partitionBy(sink)``
+  write; only the non-partitioned fallback persists the routed frame for
+  per-sink filtered writes.
 - the pre-write ``repartition(salted_key)`` splits the zipf-head source
   across SALT buckets so no reducer/writer owns 34 % of the data.
 - aggregates are partial+final hash aggs (bytes moved ≈ #groups, not #rows).
@@ -23,6 +28,7 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..functions.grok import GrokPattern
 from ..functions.hashing import salted_key
@@ -31,6 +37,7 @@ from ..operators.attraction import AttrAction, apply_actions
 from ..operators.enrich import broadcast_enrich
 from ..operators.relabel import RelabelRule, apply_relabel
 from ..operators.router import Route, route_tag
+from ..session import local_frame
 from ..sources.tableio import TableIO
 from .metrics import StageMetrics
 
@@ -107,9 +114,14 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Execute the flagship job; returns the stage frames + aggregates.
 
-    Returns keys: parsed, enriched, tagged, source_counts, sink_counts.
-    When ``io`` is given, each sink subset is committed as a snapshot group
-    and the metrics table is appended (resumable via plans.ledger).
+    Returns keys: parsed, enriched, tagged, source_counts, sink_counts,
+    metrics.  When ``io`` is given, each sink subset is committed as a
+    snapshot group and the metrics table is appended (resumable via
+    plans.ledger).  After a partitioned commit, ``sink_counts`` holds the
+    counts of the committed data as a driver-local frame with the schema of
+    ``counts_by_sink(tagged)``: collecting it launches no Spark job.  It
+    stays the lazy ``counts_by_sink(tagged)`` frame without ``io``, on the
+    non-partitioned fallback, and on a resume no-op whose data was cleaned.
     """
     spec = spec or PipelineSpec()
     metrics = metrics or StageMetrics(run_id=run_id)
@@ -184,18 +196,26 @@ def run_pipeline(
             )
             for s, snap in commit.snapshots.items():
                 metrics.rows.append((run_id, f"commit:{s}", -1, None, None, None, snap))
-            # lineage from the WRITTEN data (columnar count readback) — no
-            # second execution of the parse/enrich DAG.  The commit handle
-            # carries the data path (no IO-layout assumptions); a resume
-            # no-op whose data was cleaned away returns None → skip.
+            # sent per sink from the WRITTEN data: one columnar count
+            # readback feeds both the lineage rows and ``sink_counts``, so
+            # the parse/enrich DAG never runs a second time.  The read takes
+            # the routed frame's types: a sink named "2024" stays a string,
+            # and a commit with no partition dirs (empty input) reads as
+            # zero rows instead of failing schema inference.  The commit
+            # handle carries the data path (no IO-layout assumptions); a
+            # resume no-op whose data was cleaned away returns None → the
+            # lazy counts over ``tagged`` stay.
             if commit.data_dir is not None:
-                written = spark.read.parquet(commit.data_dir)
-                for row in (
-                    written.groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()
-                ):
+                read_schema = StructType(
+                    [f for f in tagged.schema if f.name in ("sink", spec.size_col)]
+                )
+                written = spark.read.schema(read_schema).parquet(commit.data_dir)
+                sent = counts_by_sink(written, "sink", spec.size_col).collect()
+                for row in sent:
                     metrics.rows.append(
-                        (run_id, f"lineage:{row['sink']}", -1, None, int(row["n"]), None, None)
+                        (run_id, f"lineage:{row['sink']}", -1, None, row["n_rows"], None, None)
                     )
+                out["sink_counts"] = local_frame(spark, sent, sink_counts.schema)
         else:
             # fallback (non-partitioned IO): bounded-memory DISK_ONLY cache +
             # per-sink filtered writes — never MEMORY-pressure the executors

@@ -9,8 +9,10 @@ every entry point (tests, bench, driver contract) gets identical physics.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 # One shuffle partition per core by default; at cluster scale this is
 # overridden (rule of thumb: 2-3x total cores, or let AQE coalesce from a
@@ -66,3 +68,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A small driver-built table as a local relation (``LocalTableScan``).
+
+    ``createDataFrame(list)`` plans as ``Scan ExistingRDD``, a Python RDD:
+    every action that reads it starts Python-worker tasks.  An Arrow table
+    is shipped to the JVM once at creation and planned as a
+    ``LocalRelation``, so reading it (a broadcast, a collect, a write) runs
+    no Python.  ``schema`` is a DDL string or a ``StructType``; its types
+    and nullability are kept exactly.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

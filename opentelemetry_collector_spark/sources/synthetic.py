@@ -14,6 +14,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from ..session import local_frame
+
 VOCAB16 = (
     "scan parse route merge batch spill shuffle probe "
     "flush drain retry defer split salt prune emit"
@@ -140,7 +142,7 @@ def gen_lookup(spark: SparkSession) -> DataFrame:
         (f"src{k}", "prod" if k % 2 == 0 else "staging", f"team{k % 3}", f"r{k % 4}")
         for k in range(9)
     ]
-    return spark.createDataFrame(rows, "source string, env string, team string, region string")
+    return local_frame(spark, rows, "source string, env string, team string, region string")
 
 
 def gen_routes(spark: SparkSession) -> DataFrame:
@@ -151,4 +153,4 @@ def gen_routes(spark: SparkSession) -> DataFrame:
         ("sink_errors", "level = 'ERROR'", 2),
         ("sink_default", "TRUE", 9),
     ]
-    return spark.createDataFrame(rows, "sink string, predicate string, priority int")
+    return local_frame(spark, rows, "sink string, predicate string, priority int")

@@ -162,6 +162,16 @@ def test_lpa_matches_scalar_replica(spark):
     assert _lpa(spark, edges) == _lpa_ref(edges)
 
 
+def test_lpa_drops_self_loop_only_node(spark):
+    """Node 7's only edge is the (7, 7, 9) self-loop: it has no neighbor to
+    vote, so it is not a node of the result; every other endpoint is."""
+    edges = [(1, 2, 5), (2, 3, 5), (1, 3, 1), (3, 4, 1),
+             (4, 5, 5), (5, 6, 5), (4, 6, 1), (7, 7, 9)]
+    got = _lpa(spark, edges)
+    assert 7 not in got
+    assert set(got) == {1, 2, 3, 4, 5, 6}
+
+
 def test_lpa_bridge_does_not_merge_dense_communities(spark):
     """Two dense triangles joined by one weak bridge: components would
     merge them; LPA keeps two communities."""

@@ -5,6 +5,8 @@ sent == received per sink, token arrays bit-equal, counts identical."""
 import pyspark.sql.functions as F
 import pytest
 
+from opentelemetry_collector_spark.operators.aggregates import counts_by_sink
+from opentelemetry_collector_spark.operators.router import Route
 from opentelemetry_collector_spark.plans.ledger import run_with_resume
 from opentelemetry_collector_spark.plans.metrics import StageMetrics, partition_lineage
 from opentelemetry_collector_spark.plans.pipeline import PipelineSpec, run_pipeline
@@ -21,6 +23,21 @@ N = 4000
 @pytest.fixture(scope="module")
 def tel(spark):
     return gen_telemetry(spark, N, seed=42).cache()
+
+
+def _collect_counting_jobs(spark, df, group):
+    """(rows, Spark job ids) of one ``collect`` run under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "collect")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _rows(rows):
+    return sorted((tuple(r) for r in rows), key=repr)
 
 
 def test_generator_deterministic(spark):
@@ -217,8 +234,17 @@ def test_fanout_commit_handle_carries_data_dir(spark, tmp_path):
     shutil.rmtree(commit.data_dir)
     commit2 = io.append_group_partitioned(tagged, "sink", list(sinks), "r1")
     assert commit2.data_dir is None and commit2.snapshots.keys() == commit.snapshots.keys()
-    # and the full pipeline resume path survives the cleaned dir (no crash)
-    run_pipeline(spark, tel, gen_lookup(spark), io=io, run_id="r1")
+    # and the full pipeline resume path survives the cleaned dir (no crash);
+    # with no data to read back, sink_counts stays the lazy counts of tagged
+    m = StageMetrics(run_id="r1")
+    again = run_pipeline(spark, tel, gen_lookup(spark), io=io, run_id="r1", metrics=m)
+    want = counts_by_sink(again["tagged"], "sink", "n_tok")
+    got, jobs = _collect_counting_jobs(spark, again["sink_counts"], "sink_counts_resume")
+    assert jobs != []
+    assert again["sink_counts"].schema == want.schema
+    assert _rows(got) == _rows(want.collect())
+    assert sum(r["n_rows"] for r in got) == 100
+    assert not any(st.startswith("lineage:") for _, st, *_ in m.rows)
 
 
 def test_snapshot_time_travel_read(spark, tmp_path):
@@ -238,3 +264,58 @@ def test_snapshot_time_travel_read(spark, tmp_path):
     assert [m["group_id"] for m in log] == ["g0", "g1"]
     with pytest.raises(KeyError):
         io.groups_at("seqs", "snap-nope")
+
+
+# Every sink name looks numeric, so partition-type inference on the written
+# directories would read the sink column back as an int.
+_NUMERIC_SINKS = PipelineSpec(
+    routes=[
+        Route("2024", "source = 'src0'", 0),
+        Route("2025", "TRUE", 9),
+    ]
+)
+
+
+@pytest.mark.parametrize(
+    "case, spec",
+    [
+        ("default", None),
+        ("one_partition", None),
+        ("src9_only", None),
+        ("numeric_sink", _NUMERIC_SINKS),
+        ("empty", None),
+    ],
+)
+def test_committed_sink_counts_are_driver_local(spark, tel, tmp_path, case, spec):
+    """After a commit, ``sink_counts`` holds the counts of the written data:
+    the schema and rows of ``counts_by_sink(tagged)``, collected without a
+    Spark job (the DAG is not re-run), and the same counts as the
+    ``lineage:<sink>`` metric rows."""
+    records = {
+        "default": tel,
+        "one_partition": gen_telemetry(spark, 500, seed=7, partitions=1),
+        # src9 has no lookup row: every record takes the enrich default
+        "src9_only": tel.filter("source = 'src9'"),
+        "numeric_sink": tel,
+        # writes no partition dir: the readback must not infer a schema
+        "empty": tel.limit(0),
+    }[case]
+    io = ParquetSnapshotIO(str(tmp_path / "sinks"))
+    m = StageMetrics(run_id="r1")
+    out = run_pipeline(spark, records, gen_lookup(spark), spec=spec, io=io, run_id="r1", metrics=m)
+    want = counts_by_sink(out["tagged"], "sink", "n_tok")
+
+    got, jobs = _collect_counting_jobs(spark, out["sink_counts"], f"sink_counts_{case}")
+    assert jobs == []
+    assert out["sink_counts"].schema == want.schema
+    assert _rows(got) == _rows(want.collect())
+    lineage = {st[len("lineage:"):]: n for _, st, _, _, n, _, _ in m.rows if st.startswith("lineage:")}
+    assert lineage == {r["sink"]: r["n_rows"] for r in got}
+    if case == "numeric_sink":
+        assert set(lineage) == {"2024", "2025"}
+    if case == "src9_only":
+        assert set(lineage) == {"sink_default", "sink_errors"}
+    if case == "empty":
+        assert got == []
+        for sink in ("sink_hot", "sink_warm", "sink_errors", "sink_default"):
+            assert io.read(spark, sink).count() == 0

@@ -57,6 +57,20 @@ def test_pipeline_pre_route_is_shuffle_free(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_driver_built_frames_are_local_relations(spark):
+    """The lookup, route and ``_metrics`` frames are local relations: reading
+    them (a broadcast, a write) starts no Python-worker task."""
+    from opentelemetry_collector_spark.plans.metrics import StageMetrics
+    from opentelemetry_collector_spark.sources.synthetic import gen_routes
+
+    m = StageMetrics(run_id="r1")
+    m.rows.append(("r1", "write:fanout", -1, None, 10, 1.5, None))
+    for df in (gen_lookup(spark), gen_routes(spark), m.to_df(spark)):
+        plan = explain(df, "simple")
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan
+
+
 def test_pipeline_aggregates_are_partial_final(spark):
     out = run_pipeline(spark, gen_telemetry(spark, 1000, partitions=4), gen_lookup(spark))
     plan = explain(out["source_counts"], "simple")
