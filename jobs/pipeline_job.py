@@ -37,7 +37,9 @@ def main() -> None:
         "--salt-buckets",
         type=int,
         default=None,
-        help="override spec.salt_buckets; 0 = straight-through write "
+        help="override spec.salt_buckets, the salt width of the pre-write "
+        "AQE rebalance on (sink, salt); the write's task and file count "
+        "follow the data size, not this value.  0 = straight-through write "
         "(no pre-write shuffle — use when input partitions are already "
         "well distributed and local shuffle scratch is the constraint)",
     )

@@ -9,9 +9,8 @@ time** with Python ``re``, maps group-name → group-index, and emits one
 ``regexp_extract(col, java_pattern, idx)`` column per group — all JVM-side,
 inside whole-stage codegen.
 
-For multi-pattern grok (first-match-wins across a pattern list) the fast
-path is a ``coalesce`` of ``nullif(regexp_extract(...), '')`` chains; a
-pandas-UDF fallback exists for pattern sets too large to fuse.
+Multi-pattern grok (first-match-wins across a pattern list) compiles to a
+``coalesce`` of ``nullif(regexp_extract(...), '')`` chains.
 """
 
 from __future__ import annotations
@@ -19,7 +18,6 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -179,30 +177,3 @@ def grok_first_match(col: Column, patterns: list[GrokPattern], group: str) -> Co
     if not candidates:
         raise KeyError(f"group {group!r} not present in any pattern")
     return F.coalesce(*candidates)
-
-
-def grok_extract_udf(patterns: list[GrokPattern], fields: list[str]):
-    """Pandas-UDF fallback for large multi-pattern sets (Arrow-batched).
-
-    Returns a function series→DataFrame usable with ``mapInPandas``-style
-    iteration; each batch is matched with pandas ``str.extract`` (C loop over
-    the batch, no Python-level per-row dispatch in our code).
-    """
-    compiled = [(re.compile(p.regex), p.group_index) for p in patterns]
-
-    def extract(batch: pd.Series) -> pd.DataFrame:
-        out = pd.DataFrame({f: pd.Series([None] * len(batch), dtype="object") for f in fields})
-        remaining = batch.index
-        for rx, gidx in compiled:
-            if len(remaining) == 0:
-                break
-            m = batch.loc[remaining].str.extract(rx)
-            hit = m.notna().any(axis=1)
-            hit_idx = m.index[hit]
-            for f in fields:
-                if f in gidx:
-                    out.loc[hit_idx, f] = m.loc[hit_idx, f]
-            remaining = m.index[~hit]
-        return out
-
-    return extract

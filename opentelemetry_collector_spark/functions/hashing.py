@@ -80,10 +80,12 @@ def token_digest(tokens: Column) -> Column:
 
 
 def salted_key(source: Column, doc_id: Column, n_salt: int) -> list[Column]:
-    """Composite repartition key ``(source, pmod(xxhash64(doc_id), n_salt))``.
+    """Composite shuffle key ``(source, pmod(xxhash64(doc_id), n_salt))``.
 
     The explicit skew treatment mandated by the north_rule: the zipf-heavy
-    head source (src0 ≈ 34 % of rows) is split across ``n_salt`` shuffle
-    partitions instead of hot-spotting one reducer.
+    head source (src0 ≈ 34 % of rows) is spread over ``n_salt`` distinct
+    keys instead of hashing to one reducer.  ``n_salt`` is the salt width,
+    not a partition count: the shuffle the key feeds (a ``repartition`` or
+    an AQE ``rebalance``) decides how many partitions the keys land in.
     """
     return [source, F.pmod(F.xxhash64(doc_id), F.lit(n_salt)).alias("_salt")]

@@ -17,8 +17,11 @@ Scale posture (the 100 TB story):
 - route is a single CASE-WHEN tag (one pass) + one ``partitionBy(sink)``
   write; only the non-partitioned fallback persists the routed frame for
   per-sink filtered writes.
-- the pre-write ``repartition(salted_key)`` splits the zipf-head source
-  across SALT buckets so no reducer/writer owns 34 % of the data.
+- the pre-write shuffle is an AQE rebalance on the salted key
+  ``(sink, salt)`` of ``salted_key``: the salt splits the zipf-head source
+  so no writer owns 34 % of the data, and AQE sets the write's task and
+  file count from the data size (coalescing small partitions, splitting
+  big ones), not from ``salt_buckets``.
 - aggregates are partial+final hash aggs (bytes moved ≈ #groups, not #rows).
 """
 
@@ -66,6 +69,10 @@ class PipelineSpec:
     source_col: str = "source"
     id_col: str = "doc_id"
     size_col: str = "n_tok"
+    # salt width of the committed write's rebalance key (sink, salt): how
+    # many keys the zipf-head sink spreads over.  AQE sets the write's task
+    # and file count from the data size, not from this; <= 0 writes
+    # straight through with no shuffle.
     salt_buckets: int = 32
     lookup_defaults: dict[str, object] = field(default_factory=lambda: {"env": "unknown"})
     # optional processor chains, executed in collector order after parse:
@@ -172,17 +179,28 @@ def run_pipeline(
 
     if io is not None:
         # Salt the routed write so the zipf-head source spreads across
-        # writers (north_rule skew mandate).  salt_buckets<=0 skips the
-        # shuffle entirely (straight-through write): with the single-pass
-        # partitionBy(sink) writer every task writes its own slice of every
-        # sink, so an already-well-distributed input needs NO exchange — the
-        # trade is more, smaller files per sink vs shuffle+sort scratch
-        # (~2× the dataset on local disk; the measured 100M-row ceiling on
-        # this box).  Keep salting when downstream wants few big files.
+        # writers (north_rule skew mandate): an AQE rebalance on the salted
+        # key (sink, salt).  AQE coalesces small shuffle partitions and
+        # splits oversized ones, so the task and file count follow the data
+        # size, not ``salt_buckets``; the salt only keeps one sink from
+        # hashing into one partition.  The hint names columns (it rejects
+        # expressions), so the salt rides in a temporary column that no
+        # user column can collide with, dropped before the write.
+        # salt_buckets<=0 skips the shuffle entirely (straight-through
+        # write): with the single-pass partitionBy(sink) writer every task
+        # writes its own slice of every sink, so an already-well-distributed
+        # input needs NO exchange — the trade is more, smaller files per
+        # sink vs shuffle+sort scratch (~2× the dataset on local disk).
         if spec.salt_buckets > 0:
-            salted = tagged.repartition(
-                spec.salt_buckets,
-                *salted_key(F.col("sink"), F.col(spec.id_col), spec.salt_buckets),
+            taken = {c.lower() for c in tagged.columns}
+            salt_col = "_salt"
+            while salt_col in taken:
+                salt_col = "_" + salt_col
+            _, salt = salted_key(F.col("sink"), F.col(spec.id_col), spec.salt_buckets)
+            salted = (
+                tagged.select("*", salt.alias(salt_col))
+                .hint("rebalance", "sink", salt_col)
+                .drop(salt_col)
             )
         else:
             salted = tagged

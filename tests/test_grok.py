@@ -64,18 +64,6 @@ def test_first_match_wins(spark):
     assert got == {"GET /user/42": "42", "POST /cart/7/add": "7"}
 
 
-def test_udf_fallback_batch():
-    import pandas as pd
-
-    from opentelemetry_collector_spark.functions.grok import grok_extract_udf
-
-    pats = [GrokPattern(r"^A(?P<x>\d+)$"), GrokPattern(r"^B(?P<x>\d+)(?P<y>[a-z])$")]
-    fn = grok_extract_udf(pats, ["x", "y"])
-    out = fn(pd.Series(["A1", "B2z", "nope"]))
-    assert list(out["x"]) == ["1", "2", None]
-    assert list(out["y"]) == [None, "z", None]
-
-
 def test_escaped_dollar_is_not_an_anchor(spark):
     """'\\$' at pattern end is a literal dollar, not an anchor: the pattern
     must take the per-group regexp_extract slow path, and trailing text

@@ -2,6 +2,12 @@
 correctness flow (validator.assertSentRecdTracingDataEqual): every record
 sent == received per sink, token arrays bit-equal, counts identical."""
 
+import glob
+import os
+import re
+from collections import Counter
+
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -9,7 +15,7 @@ from opentelemetry_collector_spark.operators.aggregates import counts_by_sink
 from opentelemetry_collector_spark.operators.router import Route
 from opentelemetry_collector_spark.plans.ledger import run_with_resume
 from opentelemetry_collector_spark.plans.metrics import StageMetrics, partition_lineage
-from opentelemetry_collector_spark.plans.pipeline import PipelineSpec, run_pipeline
+from opentelemetry_collector_spark.plans.pipeline import DEFAULT_ROUTES, PipelineSpec, run_pipeline
 from opentelemetry_collector_spark.sources.synthetic import (
     gen_lookup,
     gen_sequences,
@@ -284,6 +290,8 @@ _NUMERIC_SINKS = PipelineSpec(
         ("src9_only", None),
         ("numeric_sink", _NUMERIC_SINKS),
         ("empty", None),
+        ("unparseable", None),
+        ("null_source", None),
     ],
 )
 def test_committed_sink_counts_are_driver_local(spark, tel, tmp_path, case, spec):
@@ -299,6 +307,11 @@ def test_committed_sink_counts_are_driver_local(spark, tel, tmp_path, case, spec
         "numeric_sink": tel,
         # writes no partition dir: the readback must not infer a schema
         "empty": tel.limit(0),
+        # grok refuses every line: every parsed field is NULL
+        "unparseable": tel.withColumn("raw", F.lit("not a log line")),
+        "null_source": tel.withColumn(
+            "source", F.when(F.col("source") != "src1", F.col("source"))
+        ),
     }[case]
     io = ParquetSnapshotIO(str(tmp_path / "sinks"))
     m = StageMetrics(run_id="r1")
@@ -315,7 +328,113 @@ def test_committed_sink_counts_are_driver_local(spark, tel, tmp_path, case, spec
         assert set(lineage) == {"2024", "2025"}
     if case == "src9_only":
         assert set(lineage) == {"sink_default", "sink_errors"}
+    if case == "unparseable":  # level is NULL, so no record routes to sink_errors
+        assert "sink_errors" not in lineage and sum(lineage.values()) == N
     if case == "empty":
         assert got == []
         for sink in ("sink_hot", "sink_warm", "sink_errors", "sink_default"):
             assert io.read(spark, sink).count() == 0
+
+
+def _sql_plans(spark):
+    """{execution id: formatted physical plan} of the SQL executions the
+    session has run so far (final plans for adaptive ones)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {
+        ex.apply(i).executionId(): ex.apply(i).physicalPlanDescription()
+        for i in range(ex.size())
+    }
+
+
+def _shuffle_exchanges(plan):
+    """Arguments of every shuffle ``Exchange`` in a formatted plan's final
+    tree (an adaptive plan's initial tree and broadcasts excluded)."""
+    tree = plan.split("== Initial Plan ==")[0]
+    ids = re.findall(r"(?<!Broadcast)Exchange \((\d+)\)", tree)
+    return [
+        re.search(rf"^\({i}\) Exchange\n(?:.*\n)*?Arguments: (.*)$", plan, re.M).group(1)
+        for i in ids
+    ]
+
+
+@pytest.mark.parametrize(
+    "case, salt_buckets",
+    [("salted", 32), ("user_salt_column", 32), ("no_salt", 0)],
+)
+def test_committed_write_rebalances_on_salted_key(spark, tmp_path, case, salt_buckets):
+    """The committed fan-out shuffles once, an AQE rebalance on (sink, salt):
+    AQE sizes the write, the salt spreads every sink (the zipf-head one
+    included) over several write tasks, the temporary salt column never
+    reaches the committed data and never replaces a user column of the same
+    name, and the rows and token arrays arrive unchanged."""
+    records = gen_telemetry(spark, 20000, partitions=4)
+    if case == "user_salt_column":
+        records = records.withColumn("_salt", F.crc32("doc_id"))
+    io = ParquetSnapshotIO(str(tmp_path / "sinks"))
+    before = set(_sql_plans(spark))
+    out = run_pipeline(
+        spark, records, gen_lookup(spark), spec=PipelineSpec(salt_buckets=salt_buckets),
+        io=io, run_id="r1",
+    )
+    tagged = out["tagged"]
+    writes = [
+        p for i, p in _sql_plans(spark).items()
+        if i not in before and "InsertIntoHadoopFsRelationCommand" in p and "_fanout" in p
+    ]
+    assert len(writes) == 1
+    exchanges = _shuffle_exchanges(writes[0])
+
+    # every file holds exactly the routed columns: no salt, user columns kept
+    files = glob.glob(str(tmp_path / "sinks" / "_fanout" / "**" / "part-*"), recursive=True)
+    data_cols = set(tagged.columns) - {"sink"}
+    for f in files:
+        assert set(pq.read_schema(f).names) == data_cols
+
+    cols = ["doc_id", F.xxhash64("tokens").alias("tok_hash")]
+    if case == "user_salt_column":
+        cols.append("_salt")
+    want = tagged.select("sink", *cols)
+    for s in (r.sink for r in DEFAULT_ROUTES):
+        got = io.read(spark, s).select(F.lit(s).alias("sink"), *cols)
+        assert _rows(got.collect()) == _rows(want.filter(F.col("sink") == s).collect())
+
+    if salt_buckets <= 0:
+        assert exchanges == []
+        return
+    assert len(exchanges) == 1
+    key = re.match(
+        r"hashpartitioning\(sink#\d+, (\w+)#\d+L?, \d+\), REBALANCE_PARTITIONS_BY_COL",
+        exchanges[0],
+    )
+    assert key is not None, exchanges[0]
+    assert key.group(1) not in data_cols
+    # several tasks per sink, and no task near the zipf head's row share
+    per_sink, per_task = Counter(), Counter()
+    for f in files:
+        n = pq.ParquetFile(f).metadata.num_rows
+        per_sink[os.path.basename(os.path.dirname(f))] += n > 0
+        per_task[re.search(r"part-(\d+)", os.path.basename(f)).group(1)] += n
+    assert all(n > 1 for n in per_sink.values()), per_sink
+    total = sum(per_task.values())
+    head_share = tagged.filter("source = 'src0'").count() / total
+    assert total == 20000 and max(per_task.values()) / total < head_share, per_task
+
+
+def test_fallback_commit_writes_rebalanced_frame_without_salt(spark, tmp_path):
+    """The non-partitioned fallback (DISK_ONLY persist + per-sink writes)
+    consumes the same rebalanced frame: every sink's committed rows and
+    token arrays equal its rows of ``tagged``, with no salt column."""
+    io = ParquetSnapshotIO(str(tmp_path / "sinks"))
+    records = gen_telemetry(spark, 2000, partitions=2)
+    out = run_pipeline(
+        spark, records, gen_lookup(spark), spec=PipelineSpec(single_pass_fanout=False),
+        io=io, run_id="r1",
+    )
+    tagged = out["tagged"]
+    cols = ["doc_id", F.xxhash64("tokens").alias("tok_hash")]
+    for s in (r.sink for r in DEFAULT_ROUTES):
+        got = io.read(spark, s)
+        assert not [c for c in got.columns if "salt" in c]
+        want = tagged.filter(F.col("sink") == s).select(*cols)
+        assert _rows(got.select(*cols).collect()) == _rows(want.collect())
